@@ -118,14 +118,6 @@ def build_parser() -> argparse.ArgumentParser:
         "always serves at the stored level",
     )
     tok.add_argument(
-        "--driver-loop",
-        action="store_true",
-        help="train (bpe/wordpiece): run the merge loop driver-side over "
-        "the collected vocabulary (the subword-nmt architecture — use for "
-        "production merge budgets; identical output, ~1000x faster per "
-        "merge; the corpus pass stays distributed)",
-    )
-    tok.add_argument(
         "--vocab-size", type=int, default=32, help="train (unigram): piece budget"
     )
     tok.add_argument(
@@ -337,12 +329,7 @@ def main(argv: list[str] | None = None) -> int:
                 from billing_etl_v1_spark.operators import bpe as bpe_ops
 
                 cap = 256 if args.max_word_len is None else args.max_word_len
-                learn = (
-                    bpe_ops.bpe_learn_driver
-                    if getattr(args, "driver_loop", False)
-                    else bpe_ops.bpe_learn
-                )
-                merges, vocab = learn(
+                merges, vocab = bpe_ops.bpe_learn(
                     docs,
                     num_merges=args.num_merges,
                     max_word_len=cap,
@@ -386,12 +373,7 @@ def main(argv: list[str] | None = None) -> int:
                 from billing_etl_v1_spark.operators import wordpiece as wp_ops
 
                 cap = 16 if args.max_word_len is None else args.max_word_len
-                build = (
-                    wp_ops.wordpiece_artifacts_driver
-                    if getattr(args, "driver_loop", False)
-                    else wp_ops.wordpiece_artifacts
-                )
-                merges, ids, segments = build(
+                merges, ids, segments = wp_ops.wordpiece_artifacts(
                     docs, num_merges=args.num_merges, max_word_len=cap
                 )
                 wp_ops.save_wordpiece(ids, segments, args.tokenizer, max_word_len=cap)

@@ -48,7 +48,23 @@ def _dot(a: Column, b: Column) -> Column:
 # measured codegen win instead of silently riding the fold fallback — speed
 # only; results are bit-identical either way (both forms accumulate in the
 # same left-to-right order; verified value-equal live).
-_DOT_UNROLL_DIM = int(os.environ.get("SPARK_GRAFT_DOT_UNROLL_DIM", "64"))
+def _env_unroll_dim() -> int:
+    """SPARK_GRAFT_DOT_UNROLL_DIM (default 64), validated: a malformed or
+    non-positive value raises an error naming the variable instead of a
+    bare int() traceback at import."""
+    raw = os.environ.get("SPARK_GRAFT_DOT_UNROLL_DIM", "64")
+    try:
+        dim = int(raw)
+    except ValueError:
+        dim = 0
+    if dim < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_DOT_UNROLL_DIM must be a positive integer, got {raw!r}"
+        )
+    return dim
+
+
+_DOT_UNROLL_DIM = _env_unroll_dim()
 
 
 def _dot_unrolled(a: Column, b: Column) -> Column:

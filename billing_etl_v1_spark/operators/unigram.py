@@ -68,8 +68,8 @@ Viterbi is per-word CPU work — an Arrow-batched pandas UDF over the
 vocabulary rows with the piece→ilp table as a plain dict closure
 (hyperparameter-bounded: ≤ seed_multiplier × vocab_size entries — the
 DSIR ratio-table posture). The per-round piece-table collect is the same
-documented, GUARDED exception class as bpe_learn_driver's: bounded by a
-hyperparameter, never by corpus size. Counting stays distributed
+documented exception class as bpe.encode_words' merge-table collect:
+bounded by a hyperparameter, never by corpus size. Counting stays distributed
 (explode + groupBy, map-side combined).
 
 Reference behavior anchored: the reference has no tokenizer (billing-only
@@ -203,7 +203,7 @@ def _with_ilp(pieces: DataFrame) -> DataFrame:
 def _collect_ilp(pieces: DataFrame) -> dict[str, int]:
     """Materialize the bounded piece table for the Viterbi closure — the
     documented hyperparameter-bounded collect (module docstring; the
-    bpe_learn_driver exception class: ≤ seed_multiplier × vocab_size
+    encode_words merge-table exception class: ≤ seed_multiplier × vocab_size
     rows by construction, never corpus-sized)."""
     return {r["piece"]: r["ilp"] for r in _with_ilp(pieces).collect()}
 
@@ -810,8 +810,8 @@ def unigram_learn_lattice(
 ) -> tuple[DataFrame, DataFrame]:
     """The FULL Kudo 2018 trainer — lattice forward-backward soft-EM and
     likelihood-loss pruning — as the driver-side sibling of
-    :func:`unigram_learn` (the bpe_learn / bpe_learn_driver duality):
-    the corpus-sized pass stays the distributed :func:`word_vocab`
+    :func:`unigram_learn` (a different algorithm — soft vs hard EM — not
+    a second path to the same result): the corpus-sized pass stays the distributed :func:`word_vocab`
     aggregate; the EM runs driver-side over the collected bounded
     vocabulary, because soft expected counts are float sums whose
     reduction order cross-engine exactness cannot survive — this trainer
@@ -837,7 +837,7 @@ def unigram_learn_lattice(
       :func:`viterbi_segment`), so ``save_unigram`` / ``unigram_encode``
       / the streaming meter serve either trainer's artifact unchanged.
 
-    Same guarded-collect contract as ``bpe_learn_driver``: the
+    Same guarded-collect contract as ``bpe_learn``: the
     vocabulary is pre-counted with a LIMIT n+1 probe and refuses to
     collect past ``max_vocab_rows``.
     """

@@ -33,8 +33,8 @@ executes its fixpoint eagerly at construction; docs_pagerank is its lazy
 fixed-rounds sibling): wall time at sf0.01 vs sf0.1 plus rounds-to-converge,
 so their cost is recorded instead of being an unpriced surprise.
 
-BPE training scaling (r5 VERDICT item 6): the merge loop's per-round cost
-is bounded by the DISTINCT-WORD vocabulary, not the corpus — probed by
+BPE training scaling (r5 VERDICT item 6): the merge loop's cost is
+bounded by the DISTINCT-WORD vocabulary, not the corpus — probed by
 replicating the sf0.01 corpus with per-copy word suffixes (vocabulary x10 /
 x64 while the merge budget stays fixed), recording rounds/sec and the
 vocabulary-table size. Corpus-bytes growth is the flagship lane's job;
@@ -472,8 +472,8 @@ def main() -> None:
         ug_ops.release_unigram_cache(spark)
 
         # WordPiece training (r8): the scored-merge loop has the BPE
-        # eager posture (2 vocab-sized jobs per round plus the per-round
-        # symbol-count aggregate); encode = one greedy pandas-UDF pass
+        # eager posture (one vocabulary checkpoint + guard count +
+        # collect, then a driver-side loop); encode = one greedy pandas-UDF pass
         # over DISTINCT words + the shared counts join, memoized with
         # training
         from billing_etl_v1_spark.operators import wordpiece as wp_ops
@@ -501,8 +501,8 @@ def main() -> None:
 
     # --- BPE training scaling in its own variable: VOCABULARY size ---
     # (r5 VERDICT item 6). Per-copy word suffixes multiply the distinct
-    # vocabulary; the merge budget stays fixed, so per-round cost and the
-    # localCheckpoint overhead are isolated against the word-table size.
+    # vocabulary; the merge budget stays fixed, so the trainer's cost is
+    # isolated against the word-table size.
     bpe_scaling = {}
     base = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     for label, rep in [("x1", 1), ("x10", 10), ("x64", 64)]:
@@ -539,7 +539,7 @@ def main() -> None:
         # unigram twin on the SAME corpus: cost per EM sweep should be
         # bounded by the vocabulary (seed explode + Viterbi UDF + recount
         # are all vocab-table work), so train time should grow sublinearly
-        # in the word count like BPE's per-round cost does
+        # in the word count like BPE's train time does
         from billing_etl_v1_spark.operators import unigram as ug_ops2
 
         def train_unigram_scaled():
@@ -558,9 +558,9 @@ def main() -> None:
         }
         ug_ops2.release_unigram_cache(spark)
 
-        # wordpiece twin on the SAME corpus: per-round cost = pair counts
-        # + symbol counts + the scored argmax, all vocabulary-bounded, so
-        # the curve should track BPE's rounds/s shape
+        # wordpiece twin on the SAME corpus: its loop maintains pair and
+        # symbol counts over the same vocabulary, so the curve should
+        # track BPE's rounds/s shape
         from billing_etl_v1_spark.operators import wordpiece as wp_ops2
 
         def train_wordpiece_scaled():
@@ -580,19 +580,19 @@ def main() -> None:
         }
         wp_ops2.release_wordpiece_cache(spark)
 
-    # driver-loop trainer at a production-grade merge budget (the lane the
-    # distributed loop cannot reach: ~0.5 s/round x 2000 would be ~17 min;
-    # the driver loop's merge rate is the number to record)
+    # the trainer at a production-grade merge budget: its merge rate,
+    # including the distributed corpus pass + collect, is the number to
+    # record
     corpus = _replicate_docs(base, 64, suffix_words=True).localCheckpoint()
 
-    def train_driver():
+    def train_2000():
         bpe_ops.release_bpe_cache(spark)
         t0 = time.perf_counter()
-        merges, _v = bpe_ops.bpe_learn_driver(corpus, num_merges=2000)
+        merges, _v = bpe_ops.bpe_learn(corpus, num_merges=2000)
         n = merges.count()
         return time.perf_counter() - t0, {"merges": n}
 
-    r = _timed_eager(train_driver, "bpe_train_driver_loop x64vocab 2000merges")
+    r = _timed_eager(train_2000, "bpe_train x64vocab 2000merges")
     bpe_scaling["driver_loop_2000"] = {
         "vocab_words": int(bpe_ops.word_vocab(corpus).count()),
         "merges": r["merges"],
@@ -601,14 +601,14 @@ def main() -> None:
         "merges_per_sec": round(r["merges"] / max(r["sec"], 1e-9), 1),
     }
     print(
-        f"# bpe_train_driver_loop: {r['merges']} merges in {r['sec']}s "
+        f"# bpe_train 2000: {r['merges']} merges in {r['sec']}s "
         f"({bpe_scaling['driver_loop_2000']['merges_per_sec']} merges/s, "
         f"incl. the distributed corpus pass + collect)",
         file=sys.stderr,
     )
 
     # --- PRODUCTION-budget tokenizer, measured end-to-end (VERDICT r6 #4):
-    # 32k BYTE-level merges with the driver loop on the vocabulary-suffixed
+    # 32k BYTE-level merges on the vocabulary-suffixed
     # sf0.1 corpus (the raw synthetic vocabulary is too small to sustain a
     # 32k budget), then save_bpe + bpe_encode of a held-out batch — the
     # full train->artifact->serve path at the budget production tokenizers
@@ -635,7 +635,7 @@ def main() -> None:
     bpe_ops.release_bpe_cache(spark)
     n_vocab32k = int(bpe_ops.word_vocab(corpus32k, level="byte").count())
     t0 = time.perf_counter()
-    merges32k, vocab32k = bpe_ops.bpe_learn_driver(
+    merges32k, vocab32k = bpe_ops.bpe_learn(
         corpus32k, num_merges=32_768, level="byte"
     )
     n_merges32k = merges32k.count()
@@ -684,7 +684,7 @@ def main() -> None:
     # is only meaningful at the SAME merge budget — the 32k lane amortizes
     # the fixed corpus pass over 2x the merges, flattering BPE by ~1.3x
     t0 = time.perf_counter()
-    m16, _v16 = bpe_ops.bpe_learn_driver(corpus32k, num_merges=16_384, level="byte")
+    m16, _v16 = bpe_ops.bpe_learn(corpus32k, num_merges=16_384, level="byte")
     n16 = int(m16.count())
     t16 = time.perf_counter() - t0
     bpe_scaling["bpe_train_16k"] = {
@@ -833,7 +833,7 @@ def main() -> None:
         _sh.rmtree(lattok_dir, ignore_errors=True)
     ug_probe.release_unigram_cache(spark)
 
-    # --- WordPiece at a production budget (r8): the driver-loop trainer
+    # --- WordPiece at a production budget (r8): the trainer
     # (fresh-entry heap over mutable likelihood-ratio scores) at a 16k
     # merge budget on the same corpus, then the full artifact derive +
     # save + held-out serve. n=1 by design (minute-scale single train).
@@ -841,7 +841,7 @@ def main() -> None:
 
     wp_probe.release_wordpiece_cache(spark)
     t0 = time.perf_counter()
-    wpm, wpi, wps = wp_probe.wordpiece_artifacts_driver(
+    wpm, wpi, wps = wp_probe.wordpiece_artifacts(
         corpus32k, num_merges=16_384, max_word_len=32
     )
     n_wp_merges = int(wpm.count())
@@ -874,7 +874,7 @@ def main() -> None:
             f"# wordpiece_train_16k: {n_wp_merges} merges over "
             f"{n_words_uni} words in {t_train_wp:.1f}s "
             f"({bpe_scaling['wordpiece_train_16k']['merges_per_sec']} merges/s, "
-            f"driver loop); save {t_save_wp:.1f}s; encode {n_enc_wp} "
+            f"incl. the corpus pass); save {t_save_wp:.1f}s; encode {n_enc_wp} "
             f"held-out docs {t_enc_wp:.1f}s",
             file=sys.stderr,
         )

@@ -59,6 +59,92 @@ def kind(s: pd.Series) -> str:
     return str(s.dtype)
 
 
+def check_query(name: str, spark, con, queries: dict, oracles: dict) -> dict:
+    """Run one registered query and its DuckDB oracle (views over
+    ``SF_ORACLE`` on ``con``) and compare them dtype-exact: row count,
+    column names, per-column dtype kind, exact non-float values, floats
+    within 1e-9. Returns the artifact record: ok / problems / rows /
+    max_float_drift / sec (plus ``no_oracle`` for unpaired queries); an
+    exception in either engine is a failed record, not a raise."""
+    t_q = time.time()
+    try:
+        sdf = queries[name](spark, SF_ORACLE).toPandas()
+        if name not in oracles:
+            return {
+                "ok": True,
+                "no_oracle": True,
+                "rows": len(sdf),
+                "problems": [],
+                "max_float_drift": None,
+                "sec": round(time.time() - t_q, 3),
+            }
+        ddf = con.execute(oracles[name]).df()
+        problems = []
+        max_drift = 0.0
+        if len(sdf) != len(ddf):
+            problems.append(f"rows {len(sdf)} != {len(ddf)}")
+        if sorted(sdf.columns) != sorted(ddf.columns):
+            problems.append(f"cols {sorted(sdf.columns)} != {sorted(ddf.columns)}")
+        else:
+            a, b = normalize(sdf), normalize(ddf)
+            for c in a.columns:
+                ka, kb = kind(a[c]), kind(b[c])
+                if ka != kb:
+                    problems.append(f"dtype[{c}]: spark={ka} oracle={kb}")
+                    continue
+                if ka == "f":
+                    av = pd.to_numeric(a[c], errors="coerce").astype(float)
+                    bv = pd.to_numeric(b[c], errors="coerce").astype(float)
+                    bad = ~np.isclose(
+                        av.fillna(-1.23e18), bv.fillna(-1.23e18), rtol=0, atol=1e-9
+                    )
+                    if bad.any():
+                        i = int(np.argmax(bad))
+                        problems.append(
+                            f"float[{c}] row {i}: {av.iloc[i]!r} != {bv.iloc[i]!r}"
+                        )
+                    else:
+                        # driver quantizes floats before hashing; warn when
+                        # raw values differ beyond ~1e-12 even though the
+                        # tolerant test passes
+                        drift = float(
+                            np.max(
+                                np.abs(
+                                    av.fillna(0).to_numpy() - bv.fillna(0).to_numpy()
+                                )
+                            )
+                            if len(av)
+                            else 0.0
+                        )
+                        max_drift = max(max_drift, drift)
+                        if drift > 1e-12:
+                            print(f"  note {name}.{c}: max float drift {drift:.3e}")
+                else:
+                    av = a[c].astype(str).where(~a[c].isna(), "<NULL>")
+                    bv = b[c].astype(str).where(~b[c].isna(), "<NULL>")
+                    bad = (av != bv).to_numpy()
+                    if bad.any():
+                        i = int(np.argmax(bad))
+                        problems.append(
+                            f"value[{c}] row {i}: {av.iloc[i]!r} != {bv.iloc[i]!r}"
+                        )
+        return {
+            "ok": not problems,
+            "rows": len(sdf),
+            "problems": problems,
+            "max_float_drift": max_drift,
+            "sec": round(time.time() - t_q, 3),
+        }
+    except Exception as exc:  # noqa: BLE001 — recorded as a failed query
+        return {
+            "ok": False,
+            "rows": None,
+            "problems": [f"{type(exc).__name__}: {exc}"],
+            "max_float_drift": None,
+            "sec": round(time.time() - t_q, 3),
+        }
+
+
 def main() -> int:
     argv = sys.argv[1:]
     json_out = None
@@ -87,92 +173,14 @@ def main() -> int:
     t_start = time.time()
     load_start = os.getloadavg()
     for name in names:
-        t_q = time.time()
-        try:
-            sdf = queries[name](spark, SF_ORACLE).toPandas()
-            if name not in oracles:
-                print(f"{name}: NO-ORACLE rows={len(sdf)}")
-                records[name] = {
-                    "ok": True,
-                    "no_oracle": True,
-                    "rows": len(sdf),
-                    "problems": [],
-                    "max_float_drift": None,
-                    "sec": round(time.time() - t_q, 3),
-                }
-                continue
-            ddf = con.execute(oracles[name]).df()
-            problems = []
-            max_drift = 0.0
-            if len(sdf) != len(ddf):
-                problems.append(f"rows {len(sdf)} != {len(ddf)}")
-            if sorted(sdf.columns) != sorted(ddf.columns):
-                problems.append(f"cols {sorted(sdf.columns)} != {sorted(ddf.columns)}")
-            else:
-                a, b = normalize(sdf), normalize(ddf)
-                for c in a.columns:
-                    ka, kb = kind(a[c]), kind(b[c])
-                    if ka != kb:
-                        problems.append(f"dtype[{c}]: spark={ka} oracle={kb}")
-                        continue
-                    if ka == "f":
-                        av = pd.to_numeric(a[c], errors="coerce").astype(float)
-                        bv = pd.to_numeric(b[c], errors="coerce").astype(float)
-                        bad = ~np.isclose(
-                            av.fillna(-1.23e18), bv.fillna(-1.23e18), rtol=0, atol=1e-9
-                        )
-                        if bad.any():
-                            i = int(np.argmax(bad))
-                            problems.append(
-                                f"float[{c}] row {i}: {av.iloc[i]!r} != {bv.iloc[i]!r}"
-                            )
-                        else:
-                            # driver quantizes floats before hashing; warn when
-                            # raw values differ beyond ~1e-12 even though the
-                            # tolerant test passes
-                            drift = float(
-                                np.max(
-                                    np.abs(
-                                        av.fillna(0).to_numpy() - bv.fillna(0).to_numpy()
-                                    )
-                                )
-                                if len(av)
-                                else 0.0
-                            )
-                            max_drift = max(max_drift, drift)
-                            if drift > 1e-12:
-                                print(f"  note {name}.{c}: max float drift {drift:.3e}")
-                    else:
-                        av = a[c].astype(str).where(~a[c].isna(), "<NULL>")
-                        bv = b[c].astype(str).where(~b[c].isna(), "<NULL>")
-                        bad = (av != bv).to_numpy()
-                        if bad.any():
-                            i = int(np.argmax(bad))
-                            problems.append(
-                                f"value[{c}] row {i}: {av.iloc[i]!r} != {bv.iloc[i]!r}"
-                            )
-            records[name] = {
-                "ok": not problems,
-                "rows": len(sdf),
-                "problems": problems,
-                "max_float_drift": max_drift,
-                "sec": round(time.time() - t_q, 3),
-            }
-            if problems:
-                failures.append(name)
-                print(f"{name}: FAIL  {'; '.join(problems)}")
-            else:
-                print(f"{name}: ok rows={len(sdf)}")
-        except Exception as exc:  # noqa: BLE001
+        rec = records[name] = check_query(name, spark, con, queries, oracles)
+        if rec.get("no_oracle"):
+            print(f"{name}: NO-ORACLE rows={rec['rows']}")
+        elif rec["ok"]:
+            print(f"{name}: ok rows={rec['rows']}")
+        else:
             failures.append(name)
-            records[name] = {
-                "ok": False,
-                "rows": None,
-                "problems": [f"{type(exc).__name__}: {exc}"],
-                "max_float_drift": None,
-                "sec": round(time.time() - t_q, 3),
-            }
-            print(f"{name}: ERROR {type(exc).__name__}: {exc}")
+            print(f"{name}: FAIL  {'; '.join(rec['problems'])}")
 
     print(f"\n{len(names) - len(failures)}/{len(names)} strict-ok; failures: {failures}")
     if json_out:

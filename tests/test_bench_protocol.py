@@ -180,13 +180,14 @@ def test_committed_snapshot_parses_and_carries_gate_evidence():
 
 
 def test_strict_artifact_green_and_full_registry():
-    """The committed STRICT_r*.json artifacts (VERDICT r9 #2) must each
-    record a full-registry 150/150 run — an artifact claiming less would
-    quietly weaken the closed registry's below-the-fold safety net."""
+    """The committed STRICT_*.json artifacts (VERDICT r9 #2; per round
+    ``STRICT_r{N}``, per change ``STRICT_pr{N}``) must each record a
+    full-registry 150/150 run — an artifact claiming less would quietly
+    weaken the closed registry's below-the-fold safety net."""
     import glob
 
-    paths = glob.glob(os.path.join(REPO, "STRICT_r*.json"))
-    assert paths, "no STRICT_r*.json committed (round >= 10 must emit one)"
+    paths = glob.glob(os.path.join(REPO, "STRICT_*.json"))
+    assert paths, "no STRICT_*.json committed (round >= 10 must emit one)"
     for path in paths:
         with open(path) as fh:
             art = json.load(fh)

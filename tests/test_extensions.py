@@ -7,7 +7,7 @@ from __future__ import annotations
 import importlib.util
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -235,6 +235,19 @@ def test_bruteforce_baselines_refuse_large_input(spark, embeddings):
         cosine_topk_bruteforce(embeddings, max_rows=10)
     # None disables the guard for deliberate offline measurement
     assert embedding_cosine_pairs(embeddings, max_rows=None).count() >= 0
+
+
+@pytest.mark.parametrize("raw", ["abc", "", "0", "-8", "6.4"])
+def test_dot_unroll_dim_env_rejects_bad_values(monkeypatch, raw):
+    """A malformed or non-positive SPARK_GRAFT_DOT_UNROLL_DIM fails with
+    an error naming the variable; a valid one is honoured."""
+    from billing_etl_v1_spark.operators import similarity
+
+    monkeypatch.setenv("SPARK_GRAFT_DOT_UNROLL_DIM", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_DOT_UNROLL_DIM"):
+        similarity._env_unroll_dim()
+    monkeypatch.setenv("SPARK_GRAFT_DOT_UNROLL_DIM", "32")
+    assert similarity._env_unroll_dim() == 32
 
 
 def test_asof_join_point_in_time_correct(spark):
@@ -1156,21 +1169,23 @@ def _spark_bpe(spark, texts: list[str], num_merges: int):
 
 
 @settings(
-    max_examples=8,
+    max_examples=10,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(
     texts=st.lists(
-        st.text(alphabet="ab1 .", min_size=0, max_size=24), min_size=0, max_size=6
+        st.text(alphabet="ab1 .'", min_size=0, max_size=24), min_size=0, max_size=6
     ),
-    num_merges=st.integers(min_value=0, max_value=5),
+    num_merges=st.integers(min_value=0, max_value=6),
 )
 def test_bpe_matches_naive_reference(spark, texts, num_merges):
-    """The distributed trainer must agree with the sequential reference on
-    adversarially small alphabets — 'ab1 .' forces count ties (byte-order
+    """The trainer must agree with the sequential reference on
+    adversarially small alphabets — "ab1 .'" forces count ties (byte-order
     tie-break), a==b chain runs ('aaaa'), digit/symbol pre-token splits,
-    and fully-merged-early vocabularies within the merge budget."""
+    and fully-merged-early vocabularies within the merge budget; the
+    random corpora reach the incremental pair-count/heap machinery's
+    stale-entry and count-revert paths, which fixed cases do not."""
     from billing_etl_v1_spark.operators import bpe as bpe_ops
 
     exp_m, exp_v, _ = _naive_bpe(texts, num_merges)
@@ -1193,6 +1208,56 @@ def test_bpe_matches_naive_reference(spark, texts, num_merges):
         for i, t in enumerate(texts)
     }
     assert got_tc == exp_tc
+
+
+@pytest.mark.parametrize(
+    "texts,level,num_merges,cap",
+    [
+        (["aaabab banana aab .12 ab1", "banana aaabab aaaa"], "char", 6, 256),
+        (["the cat's café 日本 the cat", "café 日本語 the"], "byte", 6, 256),
+        (["a" * 20 + " the mat the", "the cat"], "char", 4, 8),  # cap lane
+        (["ab ab", "ab"], "char", 10, 256),  # early stop before budget
+        # astral plane: U+1D54F / U+1F642 are one codepoint (two UTF-16
+        # units) each — the classic Python-vs-JVM divergence point
+        (["a\U0001d54f\U0001f642b \U0001d54f\U0001f642 banana"], "char", 4, 256),
+    ],
+    ids=["ties-chains", "byte-multibyte", "cap8", "early-stop", "astral"],
+)
+def test_bpe_edge_corpora_match_naive_reference(spark, texts, level, num_merges, cap):
+    """Corpora engineered to stress one behaviour each — count ties and
+    a==b chains, multibyte bytes with a contraction, the over-cap bypass,
+    the early full-merge stop, astral-plane codepoints — must give the
+    sequential reference's merges, vocabulary and per-doc counts."""
+    import re
+
+    from billing_etl_v1_spark.operators import bpe as bpe_ops
+    from billing_etl_v1_spark.operators.text import BPE_TOKEN_RE
+
+    if level == "char":
+        pre_re = BPE_TOKEN_RE
+        exp_m, exp_v, _ = _naive_bpe(texts, num_merges, max_word_len=cap)
+    else:
+        pre_re = _py_byte_pre_re("a-zA-Zé日本語", "0-9")
+        exp_m, exp_v, _ = _naive_bpe_byte(texts, num_merges, cap, pre_re=pre_re)
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    merges, vocab = bpe_ops.bpe_learn(
+        df, num_merges=num_merges, max_word_len=cap, level=level
+    )
+    assert [tuple(r) for r in merges.orderBy("merge_rank").collect()] == exp_m
+    assert {r.word: list(r.tokens) for r in vocab.collect()} == exp_v
+    got_tc = {
+        r.doc_id: (r.n_pretokens, r.n_bpe_tokens)
+        for r in bpe_ops.bpe_token_counts(
+            df, num_merges=num_merges, max_word_len=cap, level=level
+        ).collect()
+    }
+    assert got_tc == {
+        i: (len(re.findall(pre_re, t)), sum(len(exp_v[w]) for w in re.findall(pre_re, t)))
+        for i, t in enumerate(texts)
+    }
+    bpe_ops.release_bpe_cache(spark)
 
 
 def test_bpe_greedy_chain_resolves_left_to_right(spark):
@@ -1776,79 +1841,11 @@ def test_corpus_dq_audit_counts_poison_classes(spark):
     assert set(got0.values()) == {0}
 
 
-def test_bpe_learn_driver_identical_to_distributed(spark):
-    """The driver-loop trainer must produce BIT-IDENTICAL merges and
-    vocabulary to the distributed loop — same overlap counting, same
-    byte-order tie-break, same greedy apply, same cap bypass — on corpora
-    engineered to stress each (ties, a==b chains, over-cap monster,
-    multibyte at byte level, early full-merge stop)."""
-    from billing_etl_v1_spark.operators import bpe as bpe_ops
-
-    cases = [
-        (["aaabab banana aab .12 ab1", "banana aaabab aaaa"], "char", 6, 256),
-        (["the cat's café 日本 the cat", "café 日本語 the"], "byte", 6, 256),
-        (["a" * 20 + " the mat the", "the cat"], "char", 4, 8),  # cap lane
-        (["ab ab", "ab"], "char", 10, 256),  # early stop before budget
-    ]
-    for texts, level, k, cap in cases:
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-        )
-        dm, dv = bpe_ops.bpe_learn(
-            df, num_merges=k, max_word_len=cap, level=level
-        )
-        lm, lv = bpe_ops.bpe_learn_driver(
-            df, num_merges=k, max_word_len=cap, level=level
-        )
-        assert sorted(map(tuple, lm.collect())) == sorted(map(tuple, dm.collect()))
-        assert sorted(
-            (r.word, r.freq, tuple(r.tokens)) for r in lv.collect()
-        ) == sorted((r.word, r.freq, tuple(r.tokens)) for r in dv.collect())
-        bpe_ops.release_bpe_cache(spark)
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-@given(
-    texts=st.lists(
-        st.text(alphabet="ab1 .'", min_size=0, max_size=24), min_size=0, max_size=6
-    ),
-    num_merges=st.integers(min_value=0, max_value=6),
-)
-def test_bpe_learn_driver_matches_naive_reference(spark, texts, num_merges):
-    """Property sweep: the driver-loop trainer must equal the sequential
-    reference on adversarial random corpora (count ties, a==b runs,
-    fully-merged-early) — cheap per example because only the word-count
-    aggregate runs on Spark; the incremental pair-count/heap machinery is
-    what this exercises (the fixed-case identity test can't reach its
-    stale-entry and count-revert paths)."""
-    from billing_etl_v1_spark.operators import bpe as bpe_ops
-
-    exp_m, exp_v, _ = _naive_bpe(texts, num_merges)
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    merges, vocab = bpe_ops.bpe_learn_driver(df, num_merges=num_merges)
-    got_m = [
-        (r["merge_rank"], r["left_sym"], r["right_sym"], r["merged"], r["pair_count"])
-        for r in merges.orderBy("merge_rank").collect()
-    ]
-    got_v = {r["word"]: list(r["tokens"]) for r in vocab.collect()}
-    assert got_m == exp_m
-    assert got_v == exp_v
-
-
-def test_bpe_learn_driver_handles_production_merge_budget(spark):
-    """The point of the driver loop: a merge budget two orders beyond the
-    distributed loop's practical range (500 merges here ≈ 4 minutes of
-    Spark round-trips at the measured ~0.5 s/round) must complete in
-    seconds, stay internally consistent (ranks dense, counts
-    non-increasing never required — but every merge's pair must have
-    existed), and the trained vocabulary must re-encode exactly through
-    the shared serving path."""
+def test_bpe_learn_handles_production_merge_budget(spark):
+    """A deep merge budget (500 merges) must complete, stay internally
+    consistent (ranks dense), and the trained vocabulary must re-encode
+    exactly through the shared serving path; the vocabulary guard must
+    refuse an over-cap corpus."""
     from billing_etl_v1_spark.operators import bpe as bpe_ops
 
     # ~900 distinct words over a 30-symbol alphabet: plenty of merge room
@@ -1863,7 +1860,7 @@ def test_bpe_learn_driver_handles_production_merge_budget(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    merges, vocab = bpe_ops.bpe_learn_driver(df, num_merges=500)
+    merges, vocab = bpe_ops.bpe_learn(df, num_merges=500)
     got = merges.collect()
     ranks = sorted(r.merge_rank for r in got)
     assert ranks == list(range(len(ranks)))
@@ -1879,11 +1876,11 @@ def test_bpe_learn_driver_handles_production_merge_budget(spark):
     }
     assert tc == direct
     with pytest.raises(ValueError, match="max_vocab_rows"):
-        bpe_ops.bpe_learn_driver(df, num_merges=1, max_vocab_rows=10)
+        bpe_ops.bpe_learn(df, num_merges=1, max_vocab_rows=10)
     bpe_ops.release_bpe_cache(spark)
 
 
-def test_bpe_learn_driver_guard_raises_before_collect(spark, monkeypatch):
+def test_bpe_learn_guard_raises_before_collect(spark, monkeypatch):
     """The max_vocab_rows guard must fire BEFORE the driver collects the
     vocabulary (ADVICE r6 medium / VERDICT r6 #1): the documented property
     is 'fails loudly instead of OOMing the driver', which is only true if
@@ -1903,7 +1900,7 @@ def test_bpe_learn_driver_guard_raises_before_collect(spark, monkeypatch):
 
     monkeypatch.setattr(_DF, "collect", _no_collect)
     with pytest.raises(ValueError, match="max_vocab_rows"):
-        bpe_ops.bpe_learn_driver(df, num_merges=1, max_vocab_rows=5)
+        bpe_ops.bpe_learn(df, num_merges=1, max_vocab_rows=5)
 
 
 def test_bpe_family_empty_corpus(spark):
@@ -1918,8 +1915,6 @@ def test_bpe_family_empty_corpus(spark):
     for level in ("char", "byte"):
         merges, vocab = bpe_ops.bpe_learn(empty, num_merges=3, level=level)
         assert merges.count() == 0 and vocab.count() == 0
-        dm, dv = bpe_ops.bpe_learn_driver(empty, num_merges=3, level=level)
-        assert dm.count() == 0 and dv.count() == 0
         assert bpe_ops.bpe_token_counts(empty, num_merges=3, level=level).count() == 0
         ids = bpe_ops.bpe_token_ids(merges, vocab, level=level)
         assert ids.count() == (256 if level == "byte" else 0)
@@ -1938,14 +1933,14 @@ def test_bpe_stops_early_when_fully_merged(spark):
     assert got_v == {"ab": ["ab"]}
 
 
-def _naive_encode_word(word: str, merges, max_word_len: int = 256):
+def _naive_encode_word(word: str, merges, max_word_len: int = 256, level="char"):
     """Sequential Sennrich ENCODE: apply each learned merge in rank order
     as one greedy left-to-right non-overlapping pass (the same scan the
     naive trainer uses), with the over-cap bypass lane."""
-    syms = list(word)
+    syms = list(word) if level == "char" else _hex_syms(word)
     if len(syms) > max_word_len:
         return syms
-    for _rank, a, b, _m, _c in merges:
+    for _rank, a, b, _m, _c in sorted(merges):
         out, i = [], 0
         while i < len(syms):
             if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
@@ -2027,6 +2022,90 @@ def test_bpe_encode_new_docs_mixed_known_and_novel(spark):
     tc = bpe_ops.bpe_token_counts(df, num_merges=4, max_word_len=cap)
     assert sorted(map(tuple, enc.collect())) == sorted(map(tuple, tc.collect()))
     bpe_ops.release_bpe_cache(spark)
+
+
+@st.composite
+def _encode_case(draw):
+    """A random merge table plus words to encode. Merge symbols come from
+    the base alphabet and its two-symbol concatenations, so tables include
+    pairs that recur at a later rank and merged symbols used at ranks
+    below the merge that builds them; ranks advance by 1-3 (gaps, as in a
+    filtered stored table); the cap sometimes sends words to the bypass."""
+    level = draw(st.sampled_from(["char", "byte"]))
+    chars = "abc" if level == "char" else "aé"
+    base = sorted({s for c in chars for s in (list(c) if level == "char" else _hex_syms(c))})
+    pool = base + [x + y for x in base for y in base]
+    merges, rank = [], -1
+    for _ in range(draw(st.integers(min_value=0, max_value=14))):
+        rank += draw(st.integers(min_value=1, max_value=3))
+        a, b = draw(st.sampled_from(pool)), draw(st.sampled_from(pool))
+        merges.append((rank, a, b, a + b, 0))
+        pool.append(a + b)
+    words = draw(
+        st.lists(st.text(alphabet=chars, min_size=1, max_size=10), min_size=1, max_size=25)
+    )
+    cap = draw(st.integers(min_value=2, max_value=24))
+    return level, merges, words, cap
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(case=_encode_case())
+# (ab, c) ranks below the (a, b) merge that builds 'ab', and comes back at
+# rank 4: rank order gives 'abc' -> [ab, c] -> [abc]; lowest-rank-first
+# would merge at rank 1 too early, and one rank per pair would miss rank 4
+@example(case=("char", [(1, "ab", "c", "abc", 0), (2, "a", "b", "ab", 0),
+                        (4, "ab", "c", "abc", 0)], ["abc", "ababc", "cab"], 24))
+@example(case=("char", [(1, "ab", "c", "abc", 0), (2, "a", "b", "ab", 0)],
+               ["abc", "abcabc"], 4))
+def test_encode_words_matches_rank_order_apply(spark, case):
+    """encode_words (one pandas-UDF pass) must equal applying every merge
+    in rank order, word by word — on arbitrary merge tables, at both
+    levels, with the over-cap bypass."""
+    from billing_etl_v1_spark.operators import bpe as bpe_ops
+
+    level, merges, words, cap = case
+    mdf = spark.createDataFrame(merges, bpe_ops._MERGE_SCHEMA)
+    wdf = spark.createDataFrame([(w,) for w in words], "word string")
+    got = {
+        r.word: list(r.tokens)
+        for r in bpe_ops.encode_words(wdf, mdf, max_word_len=cap, level=level).collect()
+    }
+    assert got == {w: _naive_encode_word(w, merges, cap, level) for w in words}
+
+
+def test_encode_words_job_count_independent_of_merge_count(spark, tmp_path):
+    """Encoding runs a fixed number of Spark jobs: 2 merges and 200
+    merges (stored tables, read back as the serving path does) cost the
+    same job count."""
+    import random
+
+    from billing_etl_v1_spark.operators import bpe as bpe_ops
+
+    rng = random.Random(7)
+    words = spark.createDataFrame(
+        [("".join(rng.choice("abcd") for _ in range(12)),) for _ in range(40)],
+        "word string",
+    )
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (2, 200):
+        pairs = [(rng.choice("abcd"), rng.choice("abcd")) for _ in range(n)]
+        rows = [(r, a, b, a + b, 0) for r, (a, b) in enumerate(pairs)]
+        path = str(tmp_path / f"m{n}")
+        spark.createDataFrame(rows, bpe_ops._MERGE_SCHEMA).write.parquet(path)
+        merges = spark.read.parquet(path)
+        group = f"encode-jobs-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            assert len(bpe_ops.encode_words(words, merges, max_word_len=256).collect()) == 40
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[2] == jobs[200] > 0
 
 
 def test_bpe_save_load_roundtrip_serves_identically(spark, tmp_path):
@@ -2781,26 +2860,47 @@ def test_wordpiece_matches_naive_reference(spark, texts, num_merges):
         )
     assert got_c == exp_c
 
-    # the DRIVER-side trainer (fresh-entry heap over mutable scores) must
-    # be bit-identical to the distributed loop AND the reference — ties,
-    # rising scores after unrelated merges, cap bypass, all of it
-    dm, dstate = wp.wordpiece_learn_driver(df, num_merges=num_merges, max_word_len=cap)
-    got_dm = [
+    wp.release_wordpiece_cache(spark)
+
+
+@pytest.mark.parametrize(
+    "texts,num_merges,cap",
+    [
+        # astral plane: the alphabet splits codepoints in Python while the
+        # serving UDF and the DuckDB twin see JVM / RE2 strings — U+1D54F
+        # and U+1F642 are surrogate pairs in UTF-16
         (
-            r["merge_rank"],
-            r["left_sym"],
-            r["right_sym"],
-            r["merged"],
-            r["pair_count"],
-            r["left_count"],
-            r["right_count"],
-        )
-        for r in dm.orderBy("merge_rank").collect()
-    ]
-    assert got_dm == exp_m
-    _st = {r["word"]: list(r["tokens"]) for r in wp.wordpiece_learn(
-        df, num_merges=num_merges, max_word_len=cap)[1].collect()}
-    assert {r["word"]: list(r["tokens"]) for r in dstate.collect()} == _st
+            [
+                "aaabab banana aab",
+                "banana aaabab aaaa .",
+                "a\U0001d54f\U0001f642b \U0001d54f\U0001f642 banana",
+            ],
+            4,
+            10,
+        ),
+        (["a" * 20 + " the mat the", "the cat"], 4, 8),  # over-cap word
+        (["ab ab", "ab"], 10, 16),  # early stop before budget
+    ],
+    ids=["astral", "cap8", "early-stop"],
+)
+def test_wordpiece_edge_corpora_match_naive_reference(spark, texts, num_merges, cap):
+    """Fixed corpora against the sequential reference: merges with their
+    score evidence, the exported piece set, and every training word's
+    greedy segmentation."""
+    from billing_etl_v1_spark.operators import wordpiece as wp
+
+    exp_m, exp_pieces, wf = _naive_wordpiece(texts, num_merges, max_word_len=cap)
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    merges, ids, segments = wp.wordpiece_artifacts(
+        df, num_merges=num_merges, max_word_len=cap
+    )
+    assert [tuple(r) for r in merges.orderBy("merge_rank").collect()] == exp_m
+    assert {r.token for r in ids.collect()} == exp_pieces
+    assert {r.word: list(r.pieces) for r in segments.collect()} == {
+        w: _naive_greedy(w, exp_pieces, cap) for w in wf
+    }
     wp.release_wordpiece_cache(spark)
 
 
@@ -2912,21 +3012,15 @@ def test_wordpiece_empty_and_null_corpus(spark):
 
 
 def test_wordpiece_driver_artifacts_serve_identically(spark, tmp_path):
-    """wordpiece_artifacts_driver must produce the identical artifact
-    tables (ids, segments) as the distributed path, persist through
-    save_wordpiece, and serve a novel batch identically — the
-    production-budget train->artifact->serve story. Also: the guard
-    pre-counts BEFORE collecting, and a big budget exhausts cleanly."""
+    """The driver-side trainer's artifacts persist through save_wordpiece
+    and serve a novel batch identically to the in-memory tables — the
+    train->artifact->serve story. Also: a budget beyond exhaustion stops
+    cleanly, and the vocabulary guard pre-counts BEFORE collecting."""
     import pytest as _pytest
     from pyspark.sql import DataFrame as _DF
 
     from billing_etl_v1_spark.operators import wordpiece as wp
 
-    # doc 2 pins codepoint-level driver/distributed agreement on non-BMP
-    # (astral-plane) input (ADVICE r9): the driver path derives the
-    # alphabet with Python enumerate(w) while the distributed path uses
-    # JVM split(col, '') — UTF-16 surrogate pairs are the classic
-    # divergence point, and U+1D54F / U+1F642 sit above the BMP
     train = spark.createDataFrame(
         [
             (0, "aaabab banana aab"),
@@ -2936,30 +3030,22 @@ def test_wordpiece_driver_artifacts_serve_identically(spark, tmp_path):
         "doc_id long, text string",
     )
     cap = 10
-    m1, ids1, segs1 = wp.wordpiece_artifacts(train, num_merges=4, max_word_len=cap)
-    m2, ids2, segs2 = wp.wordpiece_artifacts_driver(
-        train, num_merges=4, max_word_len=cap
-    )
-    assert sorted(map(tuple, m1.collect())) == sorted(map(tuple, m2.collect()))
-    assert sorted(map(tuple, ids1.collect())) == sorted(map(tuple, ids2.collect()))
-    assert {r["word"]: list(r["pieces"]) for r in segs1.collect()} == {
-        r["word"]: list(r["pieces"]) for r in segs2.collect()
-    }
+    _m, ids, segs = wp.wordpiece_artifacts(train, num_merges=4, max_word_len=cap)
 
     # budget beyond exhaustion: the loop must stop when no pair remains
-    mx, _sx = wp.wordpiece_learn_driver(train, num_merges=10_000, max_word_len=cap)
+    mx, _sx = wp.wordpiece_learn(train, num_merges=10_000, max_word_len=cap)
     nx = mx.count()
     assert 0 < nx < 10_000
 
-    # serve a novel batch from the driver-trained persisted artifact
+    # serve a novel batch from the persisted artifact
     tok = str(tmp_path / "wpd")
-    wp.save_wordpiece(ids2, segs2, tok, max_word_len=cap)
+    wp.save_wordpiece(ids, segs, tok, max_word_len=cap)
     li, ls, lcap = wp.load_wordpiece(spark, tok)
     new = spark.createDataFrame(
         [(0, "banana bab zzz")], "doc_id long, text string"
     )
     a = sorted(map(tuple, wp.wordpiece_encode(new, li, ls, max_word_len=lcap).collect()))
-    b = sorted(map(tuple, wp.wordpiece_encode(new, ids1, segs1, max_word_len=cap).collect()))
+    b = sorted(map(tuple, wp.wordpiece_encode(new, ids, segs, max_word_len=cap).collect()))
     assert a == b
 
     # guard fires BEFORE collect (the r6 bpe lesson, applied to new code)
@@ -2970,7 +3056,7 @@ def test_wordpiece_driver_artifacts_serve_identically(spark, tmp_path):
     _DF.collect = _no_collect
     try:
         with _pytest.raises(ValueError, match="max_vocab_rows"):
-            wp.wordpiece_learn_driver(train, max_vocab_rows=2)
+            wp.wordpiece_learn(train, max_vocab_rows=2)
     finally:
         _DF.collect = orig
     wp.release_wordpiece_cache(spark)

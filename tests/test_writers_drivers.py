@@ -418,16 +418,12 @@ def test_cli_tokenizer_train_then_encode(spark, tmp_path, monkeypatch):
     )
     assert bgot == bexp
 
-    # --driver-loop trains the identical tokenizer through the driver-side
-    # merge loop (the production-budget path)
-    dtok = str(tmp_path / "dtok")
-    rc = cli.main(
-        ["tokenizer", "train", "--docs", train_path, "--tokenizer", dtok,
-         "--num-merges", "4", "--driver-loop"]
+    # the CLI persists exactly the library trainer's tables
+    lm, lv = bpe_ops.bpe_learn(spark.read.parquet(train_path), num_merges=4)
+    assert sorted(map(tuple, lm.collect())) == sorted(map(tuple, merges.collect()))
+    assert sorted((r.word, r.freq, tuple(r.tokens)) for r in lv.collect()) == sorted(
+        (r.word, r.freq, tuple(r.tokens)) for r in vocab.collect()
     )
-    assert rc == 0
-    dm, dv, _, _ = bpe_ops.load_bpe(spark, dtok)
-    assert sorted(map(tuple, dm.collect())) == sorted(map(tuple, merges.collect()))
 
     # encode without --target is a usage error, not a crash
     assert cli.main(
@@ -988,18 +984,14 @@ def test_cli_tokenizer_family_flag_wordpiece_and_unigram_alias(
     )
     assert got == exp
 
-    # --driver-loop wordpiece: the production-budget trainer persists the
-    # identical artifact (operator-level equality is property-tested;
-    # this asserts the CLI wiring reaches it)
-    dtok = str(tmp_path / "wdtok")
-    rc = cli.main(
-        ["tokenizer", "train", "--family", "wordpiece", "--docs", train_path,
-         "--tokenizer", dtok, "--num-merges", "4", "--driver-loop"]
+    # the CLI persists exactly the library trainer's tables
+    _lm, li, ls = wp_ops.wordpiece_artifacts(
+        spark.read.parquet(train_path), num_merges=4, max_word_len=cap
     )
-    assert rc == 0
-    di, ds, dcap = wp_ops.load_wordpiece(spark, dtok)
-    assert dcap == cap
-    assert sorted(map(tuple, di.collect())) == sorted(map(tuple, ids.collect()))
+    assert sorted(map(tuple, li.collect())) == sorted(map(tuple, ids.collect()))
+    assert sorted(
+        (r.word, tuple(r.pieces), r.n_tokens) for r in ls.collect()
+    ) == sorted((r.word, tuple(r.pieces), r.n_tokens) for r in segs.collect())
 
     # unigram via --family == legacy `unigram` subcommand, artifact-identical
     utok1, utok2 = str(tmp_path / "utok1"), str(tmp_path / "utok2")
